@@ -316,6 +316,22 @@ def extraction_schema(df: DataFrame, keys: Iterable, settings: ExtractionSetting
     return ", ".join(parts)
 
 
+def _has_exchange(df: DataFrame) -> bool:
+    """True if ``df``'s physical plan holds a shuffle or broadcast exchange.
+    Planning only, no job. Adaptive execution wraps exactly the plans with
+    an exchange or a subquery; a cached scan is a leaf, whatever plan
+    filled the cache."""
+    nodes = [df._jdf.queryExecution().executedPlan()]
+    while nodes:
+        node = nodes.pop()
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan" or name.endswith("Exchange"):
+            return True
+        children = node.children()
+        nodes += [children.apply(i) for i in range(children.size())]
+    return False
+
+
 def extract_features(
     df: DataFrame,
     keys: tuple = ("url", "warc_ts"),
@@ -343,9 +359,12 @@ def extract_features(
         # split packing — maxPartitionBytes/openCostInBytes — can coalesce
         # thousands of tiny files into a handful of partitions, and
         # skipping the repartition there silently serializes the kernel
-        # stage). The src.rdd conversion is one bounded driver-side plan
-        # walk per extract_features call — correctness over that cost.
-        if src.rdd.getNumPartitions() < slots:
+        # stage). On a scan the src.rdd conversion is a driver-side plan
+        # walk. Behind an exchange (a join, an aggregate) it is not: the
+        # split count is only known at run time, and src.rdd would run the
+        # upstream stages as jobs just to count, then throw them away — so
+        # fan out to the slot count without asking.
+        if _has_exchange(src) or src.rdd.getNumPartitions() < slots:
             # 1×slots measured fastest for the batched kernel (bigger
             # batches amortize; AQE handles stragglers at real scale)
             src = src.repartition(slots)

@@ -11,7 +11,10 @@ The Spark-scale analog (SURVEY.md §2.1 "Per-case checkpoint sink/source"):
   rerun converges to the identical final table;
 * every commit also appends a **lineage row** per partition (rows, bytes,
   min/max key timestamp) to ``<path>/_lineage`` so late-data recomputes can
-  target exactly the affected partitions.
+  target exactly the affected partitions. The data write and the lineage
+  read one local checkpoint of the stage output, so the stage runs once
+  and the lineage describes exactly the committed rows; the checkpoint's
+  blocks are released before ``append_stage`` returns.
 
 Parquet's job-commit protocol makes each append atomic at task granularity,
 so "committed" keys are exactly the keys of fully-written files.
@@ -20,7 +23,9 @@ so "committed" keys are exactly the keys of fully-written files.
 from __future__ import annotations
 
 import time
+import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -98,6 +103,18 @@ def partition_metrics(df: DataFrame, ts_col: str | None = None) -> DataFrame:
     return base.groupBy("__pid").agg(*aggs).withColumnRenamed("__pid", "partition_id")
 
 
+def _release(sc, site: str) -> None:
+    """Free the blocks of every local checkpoint created under call site
+    ``site``. ``df.unpersist()`` and ``catalog.clearCache()`` leave local
+    checkpoint blocks in place; ``JavaRDD.unpersist`` frees them. A cache
+    the caller persisted but had not yet filled is built under the same
+    call site; it is no local checkpoint, so it stays."""
+    for rdd in sc._jsc.getPersistentRDDs().values():
+        r = rdd.rdd()
+        if r.isLocallyCheckpointed() and r.creationSite().shortForm() == site:
+            rdd.unpersist(False)
+
+
 def append_stage(
     df: DataFrame,
     path: str,
@@ -108,25 +125,65 @@ def append_stage(
     """Append a stage output + its lineage snapshot. ``partition_by``
     hive-partitions the layout (e.g. by lang or date) so downstream reads
     with a predicate on those columns prune whole directories — asserted in
-    tests/test_plans.py::test_partition_pruning."""
+    tests/test_plans.py::test_partition_pruning.
+
+    With lineage, the stage output is materialized once (an eager local
+    checkpoint, which cuts the plan lineage) and both the data write and
+    ``partition_metrics`` read that materialization, so the lineage
+    describes exactly the committed rows. Traps of the alternatives:
+
+    * ``df.persist()``: after the write Spark re-caches every cached plan
+      that reads the written path (``recacheByPath``). A resumed stage
+      reads ``path`` through its anti-join, so it re-caches as empty and
+      the lineage misses the rows just committed.
+    * ``localCheckpoint(eager=False)``: the Python operators of the stage
+      then run inside the write's SQL execution, whose plan does not hold
+      them, so their row metrics are lost. The eager form runs them in a
+      "localCheckpoint" SQL execution that names them.
+
+    The checkpoint's blocks are freed before returning, also when the
+    write or the materialization raises. The RDDs the materialization
+    persists are found by a call site unique to this call, which marks
+    every RDD created while it is set on this thread."""
+    if not write_lineage:
+        _writer(df, partition_by).parquet(path)
+        return
+    sc = df.sparkSession.sparkContext
+    site = f"append_stage {uuid.uuid4().hex}"
+    prev = sc.getLocalProperty("callSite.short")
+    try:
+        sc.setLocalProperty("callSite.short", site)
+        try:
+            committed = df.localCheckpoint(eager=True)
+        finally:
+            sc.setLocalProperty("callSite.short", prev)
+        _writer(committed, partition_by).parquet(path)
+        metrics = partition_metrics(committed, ts_col).withColumn(
+            "committed_at", F.lit(int(time.time())).cast("long")
+        )
+        metrics.write.mode("append").parquet(f"{path}/_lineage")
+    finally:
+        _release(sc, site)
+
+
+def _writer(df: DataFrame, partition_by):
     w = df.write.mode("append")
     if partition_by:
         cols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
         w = w.partitionBy(*cols)
-    w.parquet(path)
-    if write_lineage:
-        metrics = partition_metrics(df, ts_col).withColumn(
-            "committed_at", F.lit(int(time.time())).cast("long")
-        )
-        metrics.write.mode("append").parquet(f"{path}/_lineage")
+    return w
 
 
 def processed_keys(spark: SparkSession, path: str, keys) -> DataFrame | None:
-    """Distinct committed keys, or None if nothing committed yet."""
+    """Distinct committed keys, or None if nothing committed yet. One read
+    of ``path``: a ``table_exists`` check first would infer the parquet
+    schema twice, one Spark job each."""
     keys = [keys] if isinstance(keys, str) else list(keys)
-    if not table_exists(spark, path):
+    try:
+        committed = spark.read.parquet(path)
+    except AnalysisException:  # no such path, or no parquet files in it
         return None
-    return spark.read.parquet(path).select(*keys).distinct()
+    return committed.select(*keys).distinct()
 
 
 def resume_transform(

@@ -75,6 +75,37 @@ def test_extraction_plan_is_shuffle_free(spark, pages):
     assert "Exchange" not in plan  # no shuffle for per-doc extraction
 
 
+@pytest.mark.parametrize("how", ["inner", "left_anti"])
+def test_extraction_behind_join_runs_no_job_until_action(spark, pages, how):
+    """Behind a join the split count is known only at run time: planning
+    the extraction fires no Spark job, and the output equals the
+    extraction of the same rows from a plain scan."""
+    sc = spark.sparkContext
+    keys = pages.select("url", "warc_ts").where("warc_ts < '2024-01-20'")
+    joined = pages.join(keys, ["url", "warc_ts"], how)
+    plain = spark.createDataFrame(joined.toPandas(), schema=PAGES_SCHEMA)
+
+    def jobs(group):
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    group = f"extract-behind-{how}"
+    sc.setJobGroup(group, "extract_features behind a join")
+    try:
+        out = extract_features(joined)
+        assert jobs(group) == 0
+        got = out.toPandas()
+        assert jobs(group) > 0  # the counter sees the action's jobs
+    finally:
+        sc._jsc.clearJobGroup()
+    want = extract_features(plain).toPandas()
+    assert len(got) == len(want) > 0
+    order = ["url", "warc_ts"]
+    pd.testing.assert_frame_equal(
+        got.sort_values(order).reset_index(drop=True),
+        want.sort_values(order).reset_index(drop=True))
+
+
 def test_extraction_arrow_suspect_and_null_fallback(spark):
     """The mapInArrow zero-copy path must agree with the per-doc kernels
     even when a batch contains unicode-whitespace docs (per-batch pandas

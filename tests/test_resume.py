@@ -77,6 +77,76 @@ def test_lineage_hidden_from_data_reads(spark, tmppath):
     assert df.count() == 20
 
 
+def test_commit_runs_transform_once(spark, tmppath):
+    """A resumed commit runs its transform once per remaining row, and the
+    lineage counts the rows the commit wrote. A stage output that is
+    ``persist()``ed instead re-caches after the write from the new table
+    (``recacheByPath``): its anti-join is then empty and so is the
+    lineage."""
+    src = _src(spark)
+    append_stage(_transform(src.where(F.col("k") < 10)), tmppath, ts_col="ts")
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("double")
+    def doubled(x):
+        calls.add(1)
+        return 2 * x
+
+    final = resume_transform(
+        src, "k", tmppath, lambda df: df.withColumn("y", doubled("x")),
+        ts_col="ts")
+    assert calls.value == 10
+    committed = final.count()
+    assert committed == 20
+    lin = read_lineage(spark, tmppath).agg(F.sum("rows")).first()[0]
+    assert lin == committed
+
+
+def _persistent_rdds(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_append_stage_leaks_nothing(spark, tmp_path):
+    """append_stage frees its materialization on return, also when the
+    write or the materialization raises, and leaves the caller's caches
+    alone, a cache it had to fill included."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PythonException
+
+    kept = _transform(_src(spark)).persist()
+    unfilled = _transform(_src(spark, 7)).persist()
+    try:
+        kept.count()
+        level = kept.storageLevel
+        before = _persistent_rdds(spark)
+        append_stage(kept, str(tmp_path / "ok"), ts_col="ts")
+        assert _persistent_rdds(spark) == before
+        assert kept.storageLevel == level
+        assert spark.read.parquet(str(tmp_path / "ok")).count() == 20
+
+        blocked = tmp_path / "file"
+        blocked.write_text("not a directory")
+        with pytest.raises(Py4JJavaError):
+            append_stage(kept, str(blocked), ts_col="ts")
+        assert _persistent_rdds(spark) == before
+
+        @F.udf("double")
+        def fails(x):
+            raise ValueError("transform failed")
+
+        with pytest.raises(PythonException):
+            append_stage(_src(spark).withColumn("y", fails("x")),
+                         str(tmp_path / "failed"))
+        assert _persistent_rdds(spark) == before
+
+        append_stage(unfilled, str(tmp_path / "filled"))
+        assert _persistent_rdds(spark) == before + 1
+        assert unfilled.is_cached
+    finally:
+        unfilled.unpersist()
+        kept.unpersist()
+
+
 def test_table_exists(spark, tmppath):
     assert not table_exists(spark, tmppath)
     append_stage(_transform(_src(spark, 3)), tmppath)
