@@ -804,7 +804,9 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
              .option("path", opath)
              .option("checkpointLocation", os.path.join(tmp, "ckpt")).start())
         q.awaitTermination()
-    return (spark.read.parquet(opath).select("event_id", "iv_id")
+    # explicit schema: a join with no rows commits no data file to infer
+    # one from
+    return (spark.read.schema("event_id long, iv_id long").parquet(opath)
             .orderBy("event_id", "iv_id"))
 
 

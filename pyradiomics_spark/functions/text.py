@@ -290,3 +290,26 @@ def arrow_token_lens(text_array):
     if sus_pos.size:
         return None
     return tok_len, counts
+
+
+def intensity_ragged(text_array, settings):
+    """The one text → ``Ragged`` decode of the extraction operators: a
+    pyarrow string array of documents to their float64 intensity
+    sequences. On the default settings (whitespace tokenizer, token_len
+    intensity) the tokens come straight from the Arrow buffers
+    (``arrow_token_lens``); a batch with a possible unicode space, or any
+    other tokenizer or intensity mode, goes through
+    ``batch_text_to_intensity``, which still sends only the suspect
+    documents through Python. Null documents decode as empty."""
+    from pyradiomics_spark.kernels.batch import Ragged
+
+    if settings.tokenizer == "whitespace" and settings.intensity_mode == "token_len":
+        parsed = arrow_token_lens(text_array)
+        if parsed is not None:
+            tok_len, counts = parsed
+            return Ragged.from_concat(tok_len.astype(np.float64), counts)
+    return Ragged([
+        a.astype(np.float64)
+        for a in batch_text_to_intensity(
+            text_array.to_pylist(), settings.tokenizer,
+            settings.intensity_mode, settings.intensity_buckets)])

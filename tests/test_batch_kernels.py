@@ -3,17 +3,25 @@ different vectorization) — including NaN patterns on edge docs."""
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from pyradiomics_spark.config import ExtractionSettings
 from pyradiomics_spark.operators.features import (
-    _extract_one, _extract_batch, _batch_fast_path, feature_columns)
-from pyradiomics_spark.functions.text import text_to_intensity
+    _extract_one, _extract_from_ragged, feature_columns)
+from pyradiomics_spark.functions.text import intensity_ragged, text_to_intensity
 
 
 def _texts():
     base = pd.read_parquet("tests/goldens/fixture_pages.parquet")
     return base["text"].tolist()
+
+
+def _batch(texts, settings, image_type="original"):
+    """The production batch path: the operators' Arrow decode, then the
+    batched kernels."""
+    r0 = intensity_ragged(pa.array(texts, type=pa.string()), settings)
+    return _extract_from_ragged(r0, settings, image_type=image_type)
 
 
 @pytest.mark.parametrize("settings", [
@@ -43,9 +51,8 @@ def _texts():
         "reseg_rel", "asym_glcm", "weight_euclid", "weight_none",
         "norm_scale_reseg"])
 def test_batch_matches_per_doc(settings):
-    assert _batch_fast_path(settings)
     texts = _texts()
-    batch = _extract_batch(texts, settings)
+    batch = _batch(texts, settings)
     fcols = feature_columns(settings)
 
     for b, t in enumerate(texts):
@@ -69,7 +76,7 @@ def test_batch_random_docs(rng):
         for _ in range(120)
     ] + ["", "x", "yy yy yy"]
     settings = ExtractionSettings(bin_width=1.0)
-    batch = _extract_batch(texts, settings)
+    batch = _batch(texts, settings)
     fcols = feature_columns(settings)
     for b, t in enumerate(texts):
         vals = text_to_intensity(t or "").astype(np.float64)
@@ -84,7 +91,7 @@ def test_batch_random_docs(rng):
 
 
 def test_spark_batched_equals_golden(spark):
-    """End-to-end: the batched mapInPandas path reproduces the committed
+    """End-to-end: the single mapInArrow arm reproduces the committed
     goldens (generated by the per-doc kernels)."""
     import os
     from pyradiomics_spark.operators.features import extract_features
@@ -93,7 +100,6 @@ def test_spark_batched_equals_golden(spark):
     pdf = pd.read_parquet("tests/goldens/fixture_pages.parquet")
     df = spark.createDataFrame(pdf)
     settings = ExtractionSettings(bin_width=1.0)
-    assert _batch_fast_path(settings)
     got = extract_features(df, keys=("url", "warc_ts"), settings=settings).toPandas()
     key = ["url", "warc_ts", "image_type"]
     g = golden.sort_values(key).reset_index(drop=True)
@@ -111,7 +117,7 @@ def test_gray_level_cap_guard():
     G×G texture grid; neighboring docs in the same batch are unaffected."""
     texts = ["aa bbb cccc", "x " + "q" * 9999, "mm nn mm"]
     settings = ExtractionSettings(bin_width=1.0)
-    batch = _extract_batch(texts, settings)
+    batch = _batch(texts, settings)
     fcols = feature_columns(settings)
     for b, t in enumerate(texts):
         one = _extract_one(text_to_intensity(t).astype(float), settings)
@@ -144,7 +150,7 @@ def test_flat_after_transform_moment_parity():
                            image_types=("wavelet-L2",)),
     ):
         it = settings.image_types[0]
-        batch = _extract_batch(texts, settings, image_type=it)
+        batch = _batch(texts, settings, image_type=it)
         for b, t in enumerate(texts):
             one = _extract_one(text_to_intensity(t).astype(float), settings)
             for c in ("firstorder_Skewness", "firstorder_Kurtosis",
@@ -161,11 +167,10 @@ def test_batch_matches_per_doc_parameterized_types():
     settings = ExtractionSettings(
         bin_width=0.5, wavelet="db3", wavelet_start_level=1,
         image_types=("wavelet-L", "wavelet-H3", "log-sigma-3.5", "lbp-r3"))
-    assert _batch_fast_path(settings)
     texts = _texts()[:30]
     fcols = feature_columns(settings)
     for it in settings.image_types:
-        batch = _extract_batch(texts, settings, image_type=it)
+        batch = _batch(texts, settings, image_type=it)
         for b, t in enumerate(texts):
             vals = text_to_intensity(t or "").astype(np.float64)
             one = _extract_one(vals, settings)
@@ -184,11 +189,10 @@ def test_batch_matches_per_doc_wavelet_log():
     settings = ExtractionSettings(
         bin_width=0.5,
         image_types=("wavelet-L", "wavelet-H", "log-sigma-2"))
-    assert _batch_fast_path(settings)
     texts = _texts()
     fcols = feature_columns(settings)
     for it in settings.image_types:
-        batch = _extract_batch(texts, settings, image_type=it)
+        batch = _batch(texts, settings, image_type=it)
         for b, t in enumerate(texts):
             vals = text_to_intensity(t or "").astype(np.float64)
             one = _extract_one(vals, settings)
@@ -234,7 +238,6 @@ def test_batched_multi_image_types_match_golden(spark):
     golden = golden[golden.image_type.isin(supported)]
     pdf = pd.read_parquet("tests/goldens/fixture_pages.parquet")
     settings = ExtractionSettings(bin_width=1.0, image_types=tuple(supported))
-    assert _batch_fast_path(settings)
     got = extract_features(
         spark.createDataFrame(pdf), keys=("url", "warc_ts"),
         settings=settings).toPandas()
@@ -255,9 +258,8 @@ def test_batched_multi_image_types_match_golden(spark):
     ExtractionSettings(bin_width=1.0, distances=(1, 2, 3), gldm_a=1.0),
 ], ids=["d12", "d2", "d123_a1"])
 def test_batch_multi_distance_matches_per_doc(settings):
-    assert _batch_fast_path(settings)
     texts = _texts()
-    batch = _extract_batch(texts, settings)
+    batch = _batch(texts, settings)
     fcols = feature_columns(settings)
     for b, t in enumerate(texts):
         vals = text_to_intensity(t or "").astype(np.float64)
@@ -278,11 +280,10 @@ def test_batch_matches_per_doc_bior_wavelet():
         settings = ExtractionSettings(
             bin_width=0.5, wavelet=wav,
             image_types=("wavelet-L", "wavelet-H"))
-        assert _batch_fast_path(settings)
         texts = _texts()
         fcols = feature_columns(settings)
         for it in settings.image_types:
-            batch = _extract_batch(texts, settings, image_type=it)
+            batch = _batch(texts, settings, image_type=it)
             for b, t in enumerate(texts):
                 vals = text_to_intensity(t or "").astype(np.float64)
                 one = _extract_one(vals, settings)

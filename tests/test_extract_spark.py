@@ -1,5 +1,6 @@
-"""End-to-end extraction over Spark: mapInPandas kernel vs driver-side
-direct kernel calls on the same synthetic pages (golden cross-check)."""
+"""End-to-end extraction over Spark: the single mapInArrow arm vs
+driver-side direct kernel calls on the same synthetic pages (golden
+cross-check)."""
 
 import numpy as np
 import pandas as pd
@@ -107,9 +108,10 @@ def test_extraction_behind_join_runs_no_job_until_action(spark, pages, how):
 
 
 def test_extraction_arrow_suspect_and_null_fallback(spark):
-    """The mapInArrow zero-copy path must agree with the per-doc kernels
-    even when a batch contains unicode-whitespace docs (per-batch pandas
-    fallback) or nulls (zero-length segments)."""
+    """The mapInArrow arm must agree with the per-doc kernels even when a
+    batch contains unicode-whitespace docs (the batch decodes through
+    batch_text_to_intensity instead of the zero-copy buffer pass) or nulls
+    (zero-length segments)."""
     from pyradiomics_spark.functions.text import text_to_intensity
     from pyradiomics_spark.operators.features import (_extract_one,
                                                       extract_features)
@@ -132,29 +134,89 @@ def test_extraction_arrow_suspect_and_null_fallback(spark):
             assert got[u] == pytest.approx(want, rel=1e-12), u
 
 
-def test_matrices_arrow_matches_pandas(spark, monkeypatch):
-    """extract_matrices' zero-copy mapInArrow arm must be cell-identical to
-    the pandas arm, including unicode-whitespace fallback batches, null and
-    empty docs."""
-    import pandas as pd
+MIXED_ROWS = [("u1", "aa bbb c dddd ee fff aa bbb"),
+              ("u2", "nbsp\xa0joined words plus more extra tokens"),
+              ("u3", None),
+              ("u4", ""),
+              ("u5", "中文 文本 测试 ok fine again")]
 
+
+def _reference_cells(rows, st):
+    """Per-doc reference for extract_matrices: _cell_blocks over each
+    document's own text_to_intensity."""
+    from pyradiomics_spark.operators.matrices import MATRIX_CLASSES, _cell_blocks
+
+    vals = [text_to_intensity(t or "", st.tokenizer, st.intensity_mode,
+                              st.intensity_buckets).astype(np.float64)
+            for _, t in rows]
+    d, m, iv, jv, vv, av = _cell_blocks(vals, st, MATRIX_CLASSES)
+    return pd.DataFrame({"url": np.array([u for u, _ in rows], dtype=object)[d],
+                         "matrix": m, "i": iv, "j": jv, "value": vv,
+                         "angle": av})
+
+
+def _assert_cells_equal(got, want):
+    key = ["url", "matrix", "i", "j", "angle"]
+    assert len(got) == len(want) > 0
+    pd.testing.assert_frame_equal(
+        got[list(want.columns)].sort_values(key).reset_index(drop=True),
+        want.sort_values(key).reset_index(drop=True))
+
+
+def test_matrices_match_per_doc_reference(spark):
+    """extract_matrices is cell-identical to the per-doc reference,
+    including a unicode-whitespace batch, null and empty docs."""
     from pyradiomics_spark.operators.matrices import extract_matrices
 
-    rows = [("u1", "aa bbb c dddd ee fff aa bbb"),
-            ("u2", "nbsp\xa0joined words plus more extra tokens"),
-            ("u3", None),
-            ("u4", ""),
-            ("u5", "中文 文本 测试 ok fine again")]
-    df = spark.createDataFrame(rows, "url string, text string")
+    df = spark.createDataFrame(MIXED_ROWS, "url string, text string")
     st = ExtractionSettings(bin_width=1.0)
-    key = ["url", "matrix", "i", "j", "angle"]
-    a = extract_matrices(df, keys=("url",), settings=st).toPandas()
-    monkeypatch.setenv("PYRS_NO_ARROW", "1")
-    b = extract_matrices(df, keys=("url",), settings=st).toPandas()
-    assert len(a) == len(b) and len(a) > 0
-    a = a.sort_values(key).reset_index(drop=True)
-    b = b.sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
+    got = extract_matrices(df, keys=("url",), settings=st).toPandas()
+    _assert_cells_equal(got, _reference_cells(MIXED_ROWS, st))
+
+
+def _single_arrow_arm(out):
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
+
+
+NON_DEFAULT = pytest.mark.parametrize("st", [
+    ExtractionSettings(bin_width=1.0, tokenizer="bpe_regex"),
+    ExtractionSettings(bin_width=1.0, intensity_mode="hash_bucket"),
+], ids=["bpe_regex", "hash_bucket"])
+
+
+@NON_DEFAULT
+def test_features_non_default_text_settings(spark, st):
+    """A non-default tokenizer or intensity mode runs the same mapInArrow
+    arm and equals the per-doc reference."""
+    df = spark.createDataFrame(MIXED_ROWS, "url string, text string")
+    out = extract_features(df, keys=("url",), settings=st)
+    _single_arrow_arm(out)
+    got = out.toPandas().set_index("url")
+    assert len(got) == len(MIXED_ROWS)
+    for u, t in MIXED_ROWS:
+        vals = text_to_intensity(t or "", st.tokenizer, st.intensity_mode,
+                                 st.intensity_buckets).astype(np.float64)
+        one = _extract_one(vals, st)
+        assert got.loc[u, "diag_n_tokens"] == one["diag_n_tokens"], u
+        for c in feature_columns(st):
+            want, g = one[f"original:{c}"], got.loc[u, c]
+            if np.isnan(want):
+                assert np.isnan(g), (u, c, g)
+            else:
+                assert g == pytest.approx(want, rel=1e-9, abs=1e-12), (u, c)
+
+
+@NON_DEFAULT
+def test_matrices_non_default_text_settings(spark, st):
+    """extract_matrices under a non-default tokenizer or intensity mode:
+    one mapInArrow arm, cells equal to the per-doc reference."""
+    from pyradiomics_spark.operators.matrices import extract_matrices
+
+    df = spark.createDataFrame(MIXED_ROWS, "url string, text string")
+    out = extract_matrices(df, keys=("url",), settings=st)
+    _single_arrow_arm(out)
+    _assert_cells_equal(out.toPandas(), _reference_cells(MIXED_ROWS, st))
 
 
 def test_pivot_wide_counts_and_fill(spark):

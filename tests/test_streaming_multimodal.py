@@ -534,3 +534,25 @@ def test_stream_attribution_single_batch_equals_batch_operator(
     for ch, (fn, ln) in want.items():
         assert first.get(ch, 0) == fn, ch
         assert last.get(ch, 0) == ln, ch
+
+
+def test_stream_interval_join_gate_row_empty_events(spark, tmp_path):
+    """The gate row reads its parquet sink back with an explicit schema:
+    a zero-row events table joins no rows, and that gives an empty frame,
+    not a schema-inference error."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as e
+
+    events = pa.table({
+        "event_id": pa.array([1], pa.int64()),
+        "ts": pa.array([0], pa.timestamp("us")),
+        "user_id": pa.array([1], pa.int64()),
+        "event_type": pa.array(["view"]),
+        "value": pa.array([1.0]),
+        "props": pa.array(["{}"])})
+    pq.write_table(events.slice(0, 0), tmp_path / "events.parquet")
+    out = e.q_stream_interval_join(spark, str(tmp_path))
+    assert out.columns == ["event_id", "iv_id"]
+    assert out.count() == 0

@@ -60,13 +60,52 @@ def test_rolling_texture_matches_relational(spark):
         m["roll_entropy"].to_numpy(), m["rel_entropy"].to_numpy(), atol=1e-9)
 
 
-def test_voxel_feature_maps_match_per_window_kernels(spark):
-    """voxel_feature_maps == the per-doc kernels applied to each ±r window
-    of the doc-globally discretized sequence (binImage-once semantics)."""
+def _check_per_window(got, docs, settings, radius):
+    """Every map row in ``got`` (indexed by url, pos) equals the per-doc
+    kernels over its ±radius window of the doc-globally discretized
+    sequence. Returns the number of features checked."""
     from pyradiomics_spark.functions.text import text_to_intensity
     from pyradiomics_spark.kernels import (
         discretize, firstorder_features, glcm_features, glrlm_features,
         glszm_features, gldm_features, ngtdm_features)
+
+    checked = positions = 0
+    for url, text in docs:
+        vals = text_to_intensity(
+            text or "", settings.tokenizer, settings.intensity_mode,
+            settings.intensity_buckets).astype(np.float64)
+        if vals.size == 0:  # no positions, no rows
+            continue
+        levels = discretize(vals, settings.bin_width)
+        for p in range(vals.size):
+            lo, hi = max(0, p - radius), min(vals.size, p + radius + 1)
+            wv, wl = vals[lo:hi], levels[lo:hi]
+            row = got.loc[(url, p)]
+            positions += 1
+            fo = firstorder_features(wv, discretized=wl)
+            glcm = glcm_features(wl)
+            glrlm = glrlm_features(wl)
+            glszm = glszm_features(wl)
+            ngtdm = ngtdm_features(wl)
+            gldm = gldm_features(wl)
+            for cls, feats in (("firstorder", fo), ("glcm", glcm),
+                               ("glrlm", glrlm), ("glszm", glszm),
+                               ("ngtdm", ngtdm), ("gldm", gldm)):
+                for f, expect in feats.items():
+                    val = row[f"{cls}_{f}"]
+                    if np.isnan(expect):
+                        assert np.isnan(val), (url, p, cls, f, val)
+                    else:
+                        assert val == pytest.approx(expect, rel=1e-9, abs=1e-12), (
+                            url, p, cls, f)
+                    checked += 1
+    assert len(got) == positions
+    return checked
+
+
+def test_voxel_feature_maps_match_per_window_kernels(spark):
+    """voxel_feature_maps == the per-doc kernels applied to each ±r window
+    of the doc-globally discretized sequence (binImage-once semantics)."""
     from pyradiomics_spark.operators.voxel import voxel_feature_maps
 
     texts = ["aa bbb c dddd ee fff g", "xxxx yy z", "mm mm mm"]
@@ -81,32 +120,31 @@ def test_voxel_feature_maps_match_per_window_kernels(spark):
         df, keys=("url", "warc_ts"), radius=radius, settings=settings
     ).toPandas().set_index(["url", "pos"]).sort_index()
 
-    checked = 0
-    for i, text in enumerate(texts):
-        vals = text_to_intensity(text).astype(np.float64)
-        levels = discretize(vals, 1.0)
-        for p in range(vals.size):
-            lo, hi = max(0, p - radius), min(vals.size, p + radius + 1)
-            wv, wl = vals[lo:hi], levels[lo:hi]
-            row = out.loc[(f"u{i}", p)]
-            fo = firstorder_features(wv, discretized=wl)
-            glcm = glcm_features(wl)
-            glrlm = glrlm_features(wl)
-            glszm = glszm_features(wl)
-            ngtdm = ngtdm_features(wl)
-            gldm = gldm_features(wl)
-            for cls, feats in (("firstorder", fo), ("glcm", glcm),
-                               ("glrlm", glrlm), ("glszm", glszm),
-                               ("ngtdm", ngtdm), ("gldm", gldm)):
-                for f, expect in feats.items():
-                    got = row[f"{cls}_{f}"]
-                    if np.isnan(expect):
-                        assert np.isnan(got), (i, p, cls, f, got)
-                    else:
-                        assert got == pytest.approx(expect, rel=1e-9, abs=1e-12), (
-                            i, p, cls, f)
-                    checked += 1
-    assert checked > 1000
+    docs = [(f"u{i}", t) for i, t in enumerate(texts)]
+    assert _check_per_window(out, docs, settings, radius) > 1000
+
+
+@pytest.mark.parametrize("settings", [
+    ExtractionSettings(bin_width=1.0, tokenizer="bpe_regex"),
+    ExtractionSettings(bin_width=1.0, intensity_mode="hash_bucket"),
+], ids=["bpe_regex", "hash_bucket"])
+def test_voxel_feature_maps_non_default_text_settings(spark, settings):
+    """A non-default tokenizer or intensity mode runs the single
+    mapInArrow arm, including a unicode-space doc, a null and an empty
+    doc, and the maps equal the per-window kernels."""
+    from pyradiomics_spark.operators.voxel import voxel_feature_maps
+
+    docs = [("u1", "aa bbb c, dddd ee fff g"),
+            ("u2", "nbsp\xa0joined words plus more"),
+            ("u3", None),
+            ("u4", ""),
+            ("u5", "中文 文本 测试 ok fine")]
+    df = spark.createDataFrame(docs, "url string, text string")
+    out = voxel_feature_maps(df, keys=("url",), radius=1, settings=settings)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
+    got = out.toPandas().set_index(["url", "pos"]).sort_index()
+    assert _check_per_window(got, docs, settings, 1) > 1000
 
 
 def test_voxel_feature_maps_chunked_equals_unchunked(spark):
